@@ -100,6 +100,10 @@ final case class KgResult(
   private[graft] def mentionTriplesUnionForTest: DataFrame =
     mentionTriplesForUnion.getOrElse(mentionTriples)
 
+  /** The frames run() persisted, the envo-row frame first — exposed so
+    * tests can inspect the plans the caches were built from. */
+  private[graft] def sharedFramesForTest: Seq[DataFrame] = sharedFrames
+
   /** Release the shared caches run() created (persistIntermediates runs
     * only). Call after the sinks are written: a long-lived session
     * composing many pipelines would otherwise accumulate one envoRows +
@@ -184,8 +188,13 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     }
     // the hot intermediate is the FLAT envo-occurrence projection — all
     // primitive columns, so the columnar cache build stays cheap (caching
-    // the nested mentions array is ~10x slower)
-    val envoRows0full = MentionDetect.envoRows(turnMentions0)
+    // the nested mentions array is ~10x slower). Without checkpoints it is
+    // built straight from the turns (the direct strategy posexplodes the
+    // tagger output, one tagger call per turn); a checkpointed run reads
+    // it off the committed mentions stage.
+    val envoRows0full =
+      if (ckpt.isEmpty) MentionDetect.envoRows(spark, turns, cfg.dedupeTexts, dictBc)
+      else MentionDetect.envoRows(turnMentions0)
     val fusedApplies = ckpt.isEmpty && LinkScore.supportsFused(cfg.score)
     // Fused runs never read tool/text_hash/mention_pos (they exist for the
     // ui/upui dedup keys): drop them BEFORE the shuffle + cache build —
@@ -265,18 +274,22 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
     // boundaries so resume layouts stay config-independent.
     // partcache: materialize the partitioned cache BEFORE any consumer is
     // planned — consumer plans then see the cache's final HashPartitioning
-    // (conv_id) and every downstream agg/window/self-join goes local
-    if (materializeEnvoRows) envoRows.count()
+    // (conv_id) and every downstream agg/window/self-join goes local. The
+    // action is a noop write: it scans the cache (building every partition)
+    // in the cache-building stage itself, where count() would add a
+    // single-partition exchange and a final-aggregate job.
+    if (materializeEnvoRows) KgPipeline.materialize(envoRows)
 
     val fused: Option[DataFrame] =
       if (fusedApplies) {
         val f0 = LinkScore.scoreWithEvidence(spark, envoRows, cfg.score, cfg.evidenceCap)
         val f = if (cfg.persistIntermediates) share(f0.persist(disk)) else f0
-        // same materialize-before-plan reasoning: the co-occurrence
-        // self-join goes exchange-free only when the cached fused frame's
-        // conv_id partitioning is visible at planning time — true for
-        // every strategy (the window always leaves it conv_id-partitioned)
-        if (cfg.persistIntermediates) f.count()
+        // same materialize-before-plan reasoning (and the same noop
+        // action): the co-occurrence self-join goes exchange-free only when
+        // the cached fused frame's conv_id partitioning is visible at
+        // planning time — true for every strategy (the window always
+        // leaves it conv_id-partitioned)
+        if (cfg.persistIntermediates) KgPipeline.materialize(f)
         Some(f)
       } else None
 
@@ -337,20 +350,22 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
 }
 
 object KgPipeline {
+  /** Run `df` to completion without collecting anything: the action that
+    * fills a persisted frame's cache. */
+  private def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   // Dictionary + automaton are immutable; build them once per JVM.
   lazy val sharedDict: EnvoDict = EnvoDict.load()
   lazy val sharedAutomaton: AhoCorasick = AhoCorasick.build(sharedDict)
 
   // (SparkContext identity, dict content digest) -> broadcast automaton.
-  // Entries for a stopped context are dropped on next access.
   private val bcCache =
-    scala.collection.mutable.Map.empty[(org.apache.spark.SparkContext, String),
-      org.apache.spark.broadcast.Broadcast[AhoCorasick]]
+    new ContextCache[org.apache.spark.SparkContext,
+      org.apache.spark.broadcast.Broadcast[AhoCorasick]](_.isStopped)
 
   private[graft] def broadcastFor(spark: SparkSession, dict: EnvoDict):
-      org.apache.spark.broadcast.Broadcast[AhoCorasick] = bcCache.synchronized {
-    bcCache.keysIterator.filter(_._1.isStopped).toList.foreach(bcCache.remove)
-    bcCache.getOrElseUpdate((spark.sparkContext, dict.contentDigest),
+      org.apache.spark.broadcast.Broadcast[AhoCorasick] =
+    bcCache.getOrElseUpdate(spark.sparkContext, dict.contentDigest)(
       spark.sparkContext.broadcast(AhoCorasick.build(dict)))
-  }
 }

@@ -28,6 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * mention filter) to interpreted Volcano iteration, taxing everything
  * fused around the tagger, not just the tagger itself.
  *
+ * Call sites: the expression is deterministic, so Catalyst treats it as
+ * free to duplicate — a filter over an alias of `tag_envo(text)` gets the
+ * call copied into it (and pushed below projections and dedup aggregates),
+ * plus an inferred `isnotnull(tag_envo(text))`, each a full automaton pass.
+ * Callers hand the output to a generator instead
+ * (MentionDetect.selectNonEmpty / MentionDetect.envoRows), where the
+ * optimizer can neither push a filter below it nor infer one from it.
+ *
  * Dictionary injection: `dict = None` (the default, and the only shape the
  * SQL-registered `tag_envo` produces) uses the JVM-global automaton built
  * from the bundled resources; `dict = Some(broadcast)` tags with a caller-
@@ -116,32 +124,44 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("tag_envo", c)
 
   /** Explicit-session variant: registers on the session that will analyze
-    * the plan, then calls. Use from code that owns the session handle. */
+    * the plan (once — see [[install]]), then calls. Use from code that owns
+    * the session handle. */
   def tag_envo(spark: org.apache.spark.sql.SparkSession, c: Column): Column = {
     register(spark)
     org.apache.spark.sql.functions.call_function("tag_envo", c)
   }
 
   /** Register `tag_envo` + `vec_dot` + the IVF cell primitives for SQL use
-    * on an existing session. */
+    * on an existing session; names the session already has are left alone. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tag_envo", exprs => TagEnvoMentions(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => {
-        require(exprs.length == 2, s"vec_dot takes 2 arguments, got ${exprs.length}")
-        VecDot(exprs.head, exprs(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_best_cell", exprs => {
-        require(exprs.length == 3, s"vec_best_cell takes 3 arguments, got ${exprs.length}")
-        VecBestCell(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_top_cells", exprs => {
-        require(exprs.length == 4, s"vec_top_cells takes 4 arguments, got ${exprs.length}")
-        VecTopCells(exprs(0), exprs(1), exprs(2), exprs(3))
-      }, "built-in")
+    install(spark, "tag_envo")(exprs => TagEnvoMentions(exprs.head))
+    install(spark, "vec_dot") { exprs =>
+      require(exprs.length == 2, s"vec_dot takes 2 arguments, got ${exprs.length}")
+      VecDot(exprs.head, exprs(1))
+    }
+    install(spark, "vec_best_cell") { exprs =>
+      require(exprs.length == 3, s"vec_best_cell takes 3 arguments, got ${exprs.length}")
+      VecBestCell(exprs(0), exprs(1), exprs(2))
+    }
+    install(spark, "vec_top_cells") { exprs =>
+      require(exprs.length == 4, s"vec_top_cells takes 4 arguments, got ${exprs.length}")
+      VecTopCells(exprs(0), exprs(1), exprs(2), exprs(3))
+    }
+  }
+
+  /** Install-once registration: every Column-API entry point that takes the
+    * session registers its name only when the session's registry lacks it.
+    * Each name's builder is a pure function of the name (`bounded_min_set_<cap>`,
+    * `tag_envo_b<broadcast id>`), so an existing entry is already the right
+    * one; replacing it on every call only logged a "replaced a previously
+    * registered function" WARN per stage per pipeline run. */
+  private def install(spark: org.apache.spark.sql.SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   /** Column-API native dot product (see [[VecDot]]). Registration-free for
@@ -165,11 +185,10 @@ object GraftFunctions {
   def bounded_min_set(spark: org.apache.spark.sql.SparkSession,
                       x: Column, cap: Int): Column = {
     val name = s"bounded_min_set_$cap"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
-        BoundedMinSet(exprs.head, cap).toAggregateExpression()
-      }, "built-in")
+    install(spark, name) { exprs =>
+      require(exprs.length == 1, s"$name takes 1 argument, got ${exprs.length}")
+      BoundedMinSet(exprs.head, cap).toAggregateExpression()
+    }
     org.apache.spark.sql.functions.call_function(name, x)
   }
 
@@ -181,8 +200,7 @@ object GraftFunctions {
                     dict: org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick],
                     c: Column): Column = {
     val name = s"tag_envo_b${dict.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TagEnvoMentions(exprs.head, Some(dict)), "built-in")
+    install(spark, name)(exprs => TagEnvoMentions(exprs.head, Some(dict)))
     org.apache.spark.sql.functions.call_function(name, c)
   }
 }

@@ -3,6 +3,7 @@ package graft.stages
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 
 /** The dim/KB build job's output tables. */
@@ -41,18 +42,18 @@ object DimBuild {
       if (raw.columns.contains("seq_length")) raw.filter(col("seq_length") < lengthCutoff)
       else raw
 
-    val tagged = cut
-      .groupBy("source").agg(min("row_order").as("first_seen"))
-      .withColumn("mentions", GraftFunctions.tag_envo(spark, col("source")))
-      .filter(size(col("mentions")) > 0)
-      // the reference's envos blob: ENVO ints flattened across matches in
-      // document order (add_tagger_results.py:127-129)
-      .select(col("source"), col("first_seen"), expr("flatten(mentions.envos)").as("envos"))
-
+    // The range-partitioned sort samples its input in a job of its own
+    // before its map stage runs, and both would run the tagger: the tagged
+    // sources are cached for those build-time jobs (zipWithIndex forces
+    // them) and released once the sort's shuffle output exists — later
+    // actions on the dims read that output, not the tagger.
+    val tagged = taggedSources(spark, cut).persist(StorageLevel.MEMORY_AND_DISK)
     val ordered = tagged.orderBy("first_seen")
     val schema = ordered.schema.add("isokey", LongType, nullable = false)
+    val indexed = ordered.rdd.zipWithIndex()
+    tagged.unpersist()
     val isolationDim = spark.createDataFrame(
-        ordered.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
+        indexed.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
         schema)
       .select(col("isokey"), col("source"), col("envos"))
 
@@ -69,4 +70,20 @@ object DimBuild {
 
     BuiltDims(isolationDim, giDim, dataView)
   }
+
+  /** STEP 2+3: (source, first_seen, envos) for every distinct source with
+    * at least one ENVO mention. */
+  private[graft] def taggedSources(spark: SparkSession, cut: DataFrame): DataFrame =
+    // One tagger call per distinct source. A non-empty filter over a
+    // projected `tag_envo(source)` alias would get the call copied into it
+    // and, `source` being the grouping key, pushed below the aggregate —
+    // tagging every raw row; MentionDetect.selectNonEmpty keeps the filter
+    // above a generator the optimizer cannot push it through.
+    MentionDetect.selectNonEmpty(
+        cut.groupBy("source").agg(min("row_order").as("first_seen")),
+        Seq(col("source"), col("first_seen")),
+        GraftFunctions.tag_envo(spark, col("source")), "mentions")
+      // the reference's envos blob: ENVO ints flattened across matches in
+      // document order (add_tagger_results.py:127-129)
+      .select(col("source"), col("first_seen"), expr("flatten(mentions.envos)").as("envos"))
 }

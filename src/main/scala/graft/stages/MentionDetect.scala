@@ -48,9 +48,19 @@ object MentionDetect {
     if (dedupeTexts) detectDistinct(spark, turns, dict)
     else detectDirect(spark, turns, dict)
 
-  // Both strategies evaluate the native TagEnvoMentions Catalyst expression
-  // inside a plain projection — no Dataset Encoder round trip, and the
-  // tagger composes with whatever else the projection computes.
+  // Every tagger call site hands tag_envo's output to exactly ONE operator.
+  // The obvious shape — project `tag_envo(text) AS mentions`, then filter
+  // `size(mentions) > 0` — runs the automaton up to three times per text:
+  // Catalyst pushes a filter over an alias below the projection by COPYING
+  // the aliased expression into it (and below a dedup aggregate when the
+  // text is a grouping key), and InferFiltersFromConstraints adds an
+  // `isnotnull(tag_envo(text))` beside it. A generator is the barrier: a
+  // predicate over generator output cannot move below the Generate, and
+  // InferFiltersFromGenerate infers nothing from a generator input that is
+  // not an attribute. So the array-keeping frames emit the array through a
+  // one-element explode and filter above it, and the envo-row frame
+  // posexplodes the tagger output directly (explode already drops empty
+  // arrays). The tagger stays inside the generator's codegen span.
 
   private def tagExpr(spark: SparkSession,
       dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]],
@@ -60,6 +70,13 @@ object MentionDetect {
       case None => graft.functions.GraftFunctions.tag_envo(spark, c)
     }
 
+  /** `keep` plus `tag` as column `name`, only for rows whose tag array is
+    * non-empty — with `tag` evaluated once per row (see above). */
+  private[graft] def selectNonEmpty(df: DataFrame, keep: Seq[org.apache.spark.sql.Column],
+      tag: org.apache.spark.sql.Column, name: String): DataFrame =
+    df.select(keep :+ explode(array(tag)).as(name): _*)
+      .filter(size(col(name)) > 0)
+
   private def detectDistinct(spark: SparkSession, turns: DataFrame,
       dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]]): DataFrame = {
     val withHash = turns.withColumn("text_hash", xxhash64(col("text")))
@@ -67,12 +84,9 @@ object MentionDetect {
     // (hash, text): the hash narrows comparisons, the text equality makes
     // a 64-bit collision harmless (at 10^12 distinct texts a hash-only
     // join has non-negligible odds of pairing two different texts).
-    val tagged: DataFrame = withHash
-      .select(col("text_hash"), col("text"))
-      .dropDuplicates("text_hash", "text")
-      .select(col("text_hash"), col("text"),
-        tagExpr(spark, dict, col("text")).as("mentions"))
-      .filter(size(col("mentions")) > 0)
+    val tagged: DataFrame = selectNonEmpty(
+      withHash.select(col("text_hash"), col("text")).dropDuplicates("text_hash", "text"),
+      Seq(col("text_hash"), col("text")), tagExpr(spark, dict, col("text")), "mentions")
     withHash
       .join(tagged, Seq("text_hash", "text"))
       .select(
@@ -82,11 +96,9 @@ object MentionDetect {
 
   private def detectDirect(spark: SparkSession, turns: DataFrame,
       dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]]): DataFrame =
-    turns
-      .select(col("conv_id"), col("turn_idx"), col("tool"),
-        xxhash64(col("text")).as("text_hash"),
-        tagExpr(spark, dict, col("text")).as("mentions"))
-      .filter(size(col("mentions")) > 0)
+    selectNonEmpty(turns,
+      Seq(col("conv_id"), col("turn_idx"), col("tool"), xxhash64(col("text")).as("text_hash")),
+      tagExpr(spark, dict, col("text")), "mentions")
 
   /** Flatten to one row per mention (for the `mentions` triple sink and
     * evidence tables). */
@@ -107,17 +119,25 @@ object MentionDetect {
     * projection. The envo-occurrence granularity is the analog of one
     * decoded GI envo tuple element (seqenv/analysis.py:357). */
   def envoRows(turnMentions: DataFrame): DataFrame =
-    explodeMentionsWithMeta(turnMentions)
-      .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
-        col("mention_pos"), col("start"), col("end"), col("form"),
-        explode(col("envos")).as("envo"))
+    envoRowsOf(turnMentions, col("mentions"))
 
-  private def explodeMentionsWithMeta(turnMentions: DataFrame): DataFrame =
-    turnMentions
+  /** `envoRows(detect(spark, turns, dedupeTexts, dict))` built straight
+    * from the turns: the direct strategy posexplodes `tag_envo(text)`
+    * itself, so no filter or array frame sits between the tagger and the
+    * generator (one tagger call per turn; turns without a mention yield no
+    * rows, as the non-empty filter would). */
+  def envoRows(spark: SparkSession, turns: DataFrame, dedupeTexts: Boolean,
+               dict: Option[org.apache.spark.broadcast.Broadcast[graft.dict.AhoCorasick]]): DataFrame =
+    if (dedupeTexts) envoRows(detectDistinct(spark, turns, dict))
+    else envoRowsOf(turns.withColumn("text_hash", xxhash64(col("text"))),
+      tagExpr(spark, dict, col("text")))
+
+  private def envoRowsOf(base: DataFrame, mentions: org.apache.spark.sql.Column): DataFrame =
+    base
       .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
-        posexplode(col("mentions")).as(Seq("mention_pos", "m")))
+        posexplode(mentions).as(Seq("mention_pos", "m")))
       .select(col("conv_id"), col("turn_idx"), col("tool"), col("text_hash"),
         col("mention_pos"),
         col("m.start").as("start"), col("m.end").as("end"),
-        col("m.form").as("form"), col("m.envos").as("envos"))
+        col("m.form").as("form"), explode(col("m.envos")).as("envo"))
 }

@@ -125,21 +125,24 @@ object TripleEmit {
     *  - the OBO's typed direct edges (is_a / part_of / located_in /
     *    derives_from / adjacent_to / …, seqenv/ontology.py:88-97);
     *  - the ancestor closure as `descends_from` edges (the relation the
-    *    scorer's backtracking/restrict stages consume — envo_groups.tsv). */
-  def ontologyTriples(spark: SparkSession, dict: EnvoDict): DataFrame = {
-    import spark.implicits._
-    val onto = graft.dict.Obo.parseResource()
-    val typed = onto.edges.map(e => (e.child, e.rel, e.parent))
-    val closure = dict.closure.toSeq.sortBy(_._1)
-      .flatMap { case (c, ancs) =>
-        val cc = dict.intToCurie.get(c)
-        ancs.flatMap(a => dict.intToCurie.get(a).flatMap(ac => cc.map(x => (x, "descends_from", ac))))
-      }
-    (typed ++ closure)
-      .toDF("subj", "pred", "obj")
-      .select(col("subj"), col("pred"), col("obj"),
-        lit(1.0).as("weight"), lit(1L).as("evidence"))
-  }
+    *    scorer's backtracking/restrict stages consume — envo_groups.tsv).
+    * Parsed once per (session, dictionary), like the concept dim
+    * (Canonicalize.dictFrame). */
+  def ontologyTriples(spark: SparkSession, dict: EnvoDict): DataFrame =
+    Canonicalize.dictFrame(spark, dict, "ontology") {
+      import spark.implicits._
+      val onto = graft.dict.Obo.parseResource()
+      val typed = onto.edges.map(e => (e.child, e.rel, e.parent))
+      val closure = dict.closure.toSeq.sortBy(_._1)
+        .flatMap { case (c, ancs) =>
+          val cc = dict.intToCurie.get(c)
+          ancs.flatMap(a => dict.intToCurie.get(a).flatMap(ac => cc.map(x => (x, "descends_from", ac))))
+        }
+      (typed ++ closure)
+        .toDF("subj", "pred", "obj")
+        .select(col("subj"), col("pred"), col("obj"),
+          lit(1.0).as("weight"), lit(1L).as("evidence"))
+    }
 
   /** Per-conversation ontology subgraph (the KG-table replacement for the
     * reference's per-seq graphviz renders, seqenv/outputs.py:176-197 /

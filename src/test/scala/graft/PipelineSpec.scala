@@ -62,6 +62,11 @@ object NaiveOracle {
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
+  // (rows / sum of xxhash64 row hashes) of the concept dim and the ontology
+  // triples of the bundled dictionary, as the per-call builds produced them
+  private val ConceptDigest = "1632/193678100732728796823"
+  private val OntologyDigest = "9829/522885940148291048305"
+
   test("e2e golden: engine triples match the naive oracle (P/R target 1.0)") {
     val turns = (0L until 200L).flatMap(i => TranscriptGen.turnsFor(i, seed = 7L, meanTurns = 6, skewFactor = 25))
     val result = new KgPipeline(spark).run(turns.toDS.toDF)
@@ -254,5 +259,88 @@ class PipelineSpec extends SparkSpec {
     assert(ocean.contains(("descends_from", "ENVO:00000063"))) // closure edge
     val preds = r.ontologyTriples.select("pred").distinct().as[String].collect().toSet
     assert(preds.contains("part_of") && preds.contains("derives_from"))
+  }
+
+  test("a second run() in one session re-registers no function") {
+    // every Column-API entry point that takes the session installs its
+    // name once; re-registering on every call swapped in a fresh entry
+    // and logged a "replaced a previously registered function" WARN. A
+    // registration creates a new ExpressionInfo even when the builder is a
+    // non-capturing (cached) lambda, so the pair identifies it.
+    val reg = spark.sessionState.functionRegistry
+    def builders = reg.listFunction().flatMap(id =>
+      reg.lookupFunction(id).zip(reg.lookupFunctionBuilder(id)).map(id -> _)).toMap
+    val turns = TranscriptGen.generate(spark, 20).toDF
+    val full = KgPipeline.sharedDict
+    val tiny = full.copy(formToSerials =
+      full.formToSerials.filter(kv => Set("ocean", "lake").contains(kv._1)))
+    def runs(): Unit = Seq(
+        new KgPipeline(spark, PipelineConfig(persistIntermediates = true)),
+        new KgPipeline(spark, PipelineConfig(dedupeTexts = false), dictOverride = Some(tiny)),
+        new KgPipeline(spark, PipelineConfig(score = graft.stages.ScoreConfig(normalization = "upui"))))
+      .foreach { p =>
+        val r = p.run(turns)
+        r.allTriples.count()
+        r.unpersist()
+      }
+    runs()
+    val before = builders
+    assert(before.keys.exists(_.funcName.startsWith("tag_envo_b")) &&
+      before.keys.exists(_.funcName.startsWith("bounded_min_set_")),
+      "the runs should register the injected tagger and the evidence aggregate")
+    runs()
+    val after = builders
+    assert(after.keySet === before.keySet)
+    val replaced = before.collect {
+      case (id, (info, b)) if !((after(id)._1 eq info) && (after(id)._2 eq b)) => id.funcName
+    }
+    assert(replaced.isEmpty, s"re-registered on the second run: $replaced")
+  }
+
+  test("static frames: built once per session and dictionary, rows unchanged") {
+    val turns = Seq(Turn("z", 0, "user", "lake", None, new java.sql.Timestamp(0L))).toDS.toDF
+    val full = KgPipeline.sharedDict
+    val r1 = new KgPipeline(spark).run(turns)
+    val r2 = new KgPipeline(spark).run(turns)
+    assert(r1.ontologyTriples eq r2.ontologyTriples, "second run() rebuilt the ontology frame")
+    assert(graft.stages.Canonicalize.conceptFrame(spark, full) eq
+      graft.stages.Canonicalize.conceptFrame(spark, full), "concept dim rebuilt")
+
+    // a restricted override (the SparkEntry.restrictedDict shape: same
+    // concepts, fewer forms) is a different dictionary: its own entries
+    val restricted = full.copy(formToSerials =
+      full.formToSerials.filter(kv => Set("ocean", "lake").contains(kv._1)))
+    val rr = new KgPipeline(spark, dictOverride = Some(restricted)).run(turns)
+    assert(!(rr.ontologyTriples eq r1.ontologyTriples))
+    assert(!(graft.stages.Canonicalize.conceptFrame(spark, restricted) eq
+      graft.stages.Canonicalize.conceptFrame(spark, full)))
+    // a DataFrame belongs to its session: another session gets its own
+    val other = spark.newSession()
+    assert(!(graft.stages.Canonicalize.conceptFrame(other, full) eq
+      graft.stages.Canonicalize.conceptFrame(spark, full)))
+
+    // same rows as the per-call builds they replace: row count + the
+    // order-independent sum of 64-bit row hashes
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      import org.apache.spark.sql.functions._
+      val h = xxhash64(df.columns.map(col): _*).cast("decimal(38,0)")
+      val r = df.agg(count(lit(1)), sum(h)).head()
+      s"${r.getLong(0)}/${r.get(1)}"
+    }
+    assert(digest(graft.stages.Canonicalize.conceptFrame(spark, full)) === ConceptDigest)
+    assert(digest(r1.ontologyTriples) === OntologyDigest)
+  }
+
+  test("ContextCache drops the entries of a stopped context on next access") {
+    final class Owner { @volatile var stopped = false }
+    val cache = new ContextCache[Owner, String](_.stopped)
+    val (a, b) = (new Owner, new Owner)
+    assert(cache.getOrElseUpdate(a, "k")("a1") === "a1")
+    assert(cache.getOrElseUpdate(a, "k")("a2") === "a1", "a live entry is reused")
+    assert(cache.getOrElseUpdate(b, "k")("b1") === "b1", "owners do not share entries")
+    a.stopped = true
+    assert(cache.getOrElseUpdate(b, "k")("b2") === "b1")
+    assert(cache.getOrElseUpdate(a, "k")("a3") === "a3",
+      "the stopped owner's entry must have been evicted")
   }
 }

@@ -232,21 +232,73 @@ class PlanShapeSpec extends SparkSpec {
   test("tag_envo expression is whole-stage-codegen'd, not a fallback") {
     // fallback=false makes Janino compilation failures THROW instead of
     // silently demoting the stage to interpreted eval — this pins that the
-    // doGenCode static-call path really compiles and runs
+    // doGenCode static-call path really compiles and runs, both in the
+    // array-keeping frame and in the generator-shaped envo-row frame
+    import org.apache.spark.sql.functions.{col, sum}
     val turns = graft.synth.TranscriptGen.generate(spark, 20).toDF
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val detected = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)
       assert(detected.count() > 0)
-      // the tagging projection must sit INSIDE a WholeStageCodegen span —
-      // under CodegenFallback it would be hoisted out of every span
-      val spans = detected.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec
-          if w.toString.contains("tag_envo") => w
+      val envoRows = graft.stages.MentionDetect.envoRows(spark, turns, dedupeTexts = false, None)
+      // consume the generated columns so the generator's code compiles and runs
+      assert(envoRows.agg(sum(col("envo")), sum(col("start"))).head().getLong(0) > 0)
+      Seq(detected, envoRows).foreach { df =>
+        // the tagger must sit INSIDE a WholeStageCodegen span — under
+        // CodegenFallback it would be hoisted out of every span
+        val spans = df.queryExecution.executedPlan.collect {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+            if w.toString.contains("tag_envo") => w
+        }
+        assert(spans.nonEmpty,
+          s"tag_envo must be fused into a codegen span:\n${df.queryExecution.executedPlan}")
       }
-      assert(spans.nonEmpty,
-        s"tag_envo must be fused into a codegen span:\n${detected.queryExecution.executedPlan}")
     } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("tag_envo runs in exactly one operator on every tagging path") {
+    // A filter over the tagger's alias gets the call copied into it (and an
+    // inferred isnotnull(tag_envo(..)) beside it): each copy is a full
+    // automaton pass per row. Every path must evaluate the tagger once.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.col
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => n +: n.children.flatMap(nodes)
+    }
+    def tagCalls(df: DataFrame): Int =
+      nodes(df.queryExecution.executedPlan).map(_.expressions.map(_.collect {
+        case t: graft.functions.TagEnvoMentions => t
+      }.size).sum).sum
+    val turns = graft.synth.TranscriptGen.generate(spark, 30).toDF
+    def fusedEnvoRows(dedupe: Boolean): Int = {
+      val r = new KgPipeline(spark,
+        PipelineConfig(persistIntermediates = true, dedupeTexts = dedupe)).run(turns)
+      try tagCalls(r.sharedFramesForTest.head) finally r.unpersist()
+    }
+    import spark.implicits._
+    val raw = Seq((1L, "lake water", Option(1L), 1L), (2L, "lake water", None, 2L),
+        (3L, "no concept here", None, 3L))
+      .toDF("gi", "source", "pubmed", "row_order")
+    val paths = Seq(
+      "fused run() envo rows, direct" -> fusedEnvoRows(dedupe = false),
+      "fused run() envo rows, distinct-text" -> fusedEnvoRows(dedupe = true),
+      "detect, direct" -> tagCalls(
+        graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)),
+      "detect, distinct-text" -> tagCalls(
+        graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = true)),
+      "DimBuild tagged sources" -> tagCalls(graft.stages.DimBuild.taggedSources(spark, raw)))
+    assert(paths.filter(_._2 != 1).isEmpty, s"tag_envo operators per path: $paths")
+    // the array-keeping frames still keep only turns with >= 1 mention
+    val tm = graft.stages.MentionDetect.detect(spark, turns, dedupeTexts = false)
+    assert(tm.count() > 0 &&
+      tm.filter(org.apache.spark.sql.functions.size(col("mentions")) === 0).isEmpty)
+    assert(graft.stages.DimBuild.taggedSources(spark, raw).select("source").as[String]
+      .collect().toSeq === Seq("lake water"))
   }
 
   test("vec_dot is whole-stage-codegen'd, not a fallback") {
