@@ -11,41 +11,21 @@ final case class PipelineConfig(
     evidenceCap: Int = 20,
     /** Persist the mention/score stages (MEMORY_AND_DISK) — set when more
       * than one output sink will be materialized, so the tagger and scorer
-      * run once instead of once per sink. */
+      * run once instead of once per sink. The envo-row projection is then
+      * shared as repartition(conv_id, shufflePartitions) + sort + cache,
+      * MATERIALIZED at run() time: every key in this pipeline (scores/
+      * evidence aggs, the proportional window, the co-occurrence self-join)
+      * is prefixed by conv_id, and a materialized cache exposes its final
+      * HashPartitioning to consumer planning (an unmaterialized one reads
+      * as Unknown), so the whole downstream pipeline plans partition-local:
+      * one wide shuffle total, the tagger run once. The explicit partition
+      * count stops AQE from coalescing the cached layout below the core
+      * count. */
     persistIntermediates: Boolean = false,
     /** Physical strategy for mention detection: true = tag DISTINCT texts
       * then hash-join back (wins on duplicated corpora); false = tag every
       * turn in place with zero shuffles (wins on mostly-unique corpora). */
     dedupeTexts: Boolean = true,
-    /** HOW the envo-row projection is shared across the triple branches
-      * when persistIntermediates is set:
-      *  - "partcache": repartition(conv_id, shufflePartitions) + columnar
-      *                cache, MATERIALIZED at run() time. Every key in this
-      *                pipeline (scores/evidence aggs, the proportional
-      *                window, the co-occurrence self-join) is prefixed by
-      *                conv_id, and a MATERIALIZED cache exposes its final
-      *                HashPartitioning to consumer planning (an
-      *                unmaterialized one reads as Unknown — probed with
-      *                tools.CachePartProbe), so the whole downstream
-      *                pipeline plans partition-LOCAL: one wide shuffle
-      *                total. The explicit partition count stops AQE from
-      *                coalescing the cached layout below the core count.
-      *  - "cache":    plain columnar cache of the tagger output (no
-      *                repartition, lazy) — consumers shuffle their own
-      *                map-side-combined partials; r1-r4's default.
-      *  - "localckpt": lazy local checkpoint — UnsafeRow blocks, no
-      *                columnar build, but LogicalRDD under AQE loses the
-      *                partitioning, so downstream still shuffles.
-      *  - "exchange": bare repartition(conv_id) — per-branch column
-      *                pruning specializes each exchange copy, so reuse
-      *                does NOT fire and the tagger runs once per branch
-      *                (the r4 measurements that favored this were
-      *                measuring it against an even worse cache shape).
-      *  - "auto":     partcache (best absolute wall at every measured core
-      *                count, and the only strategy that never re-reads the
-      *                input corpus; `tools.ProfileKg <turns> <cores> direct
-      *                e2e` and tools.PairBench reproduce the A/B). */
-    sharing: String = "auto",
     /** Ship the mention-provenance columns (start, end, form) through the
       * SHARED frame on fused runs. Off (default), the one wide shuffle and
       * the columnar cache carry only (conv_id, turn_idx, envo) — ~45% fewer
@@ -58,17 +38,14 @@ final case class PipelineConfig(
       * will MATERIALIZE the provenance sink alongside the others (e.g.
       * RunKg writes mentions parquet with spans), so the tag-once sharing
       * covers it. Non-fused runs always carry the full projection. */
-    mentionProvenance: Boolean = false) {
-  require(Set("auto", "partcache", "cache", "localckpt", "exchange").contains(sharing),
-    s"sharing must be auto|partcache|cache|localckpt|exchange, got $sharing")
-}
+    mentionProvenance: Boolean = false)
 
 /** All pipeline outputs. The frames are lazy DataFrames (the reference's
   * pulled property-DAG, seqenv/analysis.py:148-159 via
   * seqenv/common/cache.py) — except that `persistIntermediates` runs
   * materialize the SHARED intermediates at run() time, so that their
   * cached partitioning is visible when the sink queries are planned
-  * (see PipelineConfig.sharing). */
+  * (see PipelineConfig.persistIntermediates). */
 final case class KgResult(
     turnMentions: DataFrame,   // (conv_id, turn_idx, tool, text_hash, mentions)
     mentionRows: DataFrame,    // flattened per-mention rows
@@ -218,67 +195,45 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
           org.apache.spark.sql.functions.col("form"),
           org.apache.spark.sql.functions.col("envo"))
       else envoRows0full
-    // auto = partcache: tag once, ONE wide shuffle, everything downstream
-    // partition-local. The "exchange" alternative (re-tag the mention
-    // branch, narrow scoring shuffle) sometimes posts a higher SCALING
-    // RATIO — but only because its low-core side pays the re-tag tax, not
-    // because its high-core side is faster (PairBench A/B: partcache wins
-    // absolute wall at BOTH 4 and 16 cores), and at 100 TB a re-tag means
-    // re-reading the corpus from object storage. Ratio by slower baseline
-    // is not a win.
-    val strategy = cfg.sharing match {
-      case "auto" => "partcache"
-      case s => s
-    }
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val shared = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def share(df: DataFrame): DataFrame = { shared += df; df }
-    var materializeEnvoRows = false
+    // persistIntermediates: tag once, ONE wide shuffle, everything
+    // downstream partition-local (see PipelineConfig.persistIntermediates).
+    // sortWithinPartitions(conv_id, turn_idx) after the shuffle: a
+    // production corpus arrives in ARBITRARY row order (only the synthetic
+    // generator happens to write conversations contiguously), and the
+    // shuffle read concatenates map outputs — so without the sort every
+    // downstream conv-keyed hash agg probes its multi-million-entry map in
+    // random key order (every probe a cache miss). Measured at the 16x
+    // corpus, 8 cores, on a shuffle-ordered input: the fused-scorer stage
+    // drops ~40% CPU (592 -> ~410 CPU-s) for a one-off in-partition sort at
+    // cache build; on an already-clustered input the sort is near-free.
+    // SortExec preserves the HashPartitioning(conv_id) the consumers plan
+    // against, and the sorted cache also satisfies the window's required
+    // child ordering (conv_id prefix), eliding that sort.
     val envoRows =
       if (!cfg.persistIntermediates) envoRows0
-      else strategy match {
-        case "partcache" =>
-          materializeEnvoRows = true
-          // sortWithinPartitions(conv_id, turn_idx) after the shuffle: a
-          // production corpus arrives in ARBITRARY row order (only the
-          // synthetic generator happens to write conversations
-          // contiguously), and the shuffle read concatenates map outputs —
-          // so without the sort every downstream conv-keyed hash agg
-          // probes its multi-million-entry map in random key order (every
-          // probe a cache miss). Measured at the 16x corpus, 8 cores, on a
-          // shuffle-ordered input: the fused-scorer stage drops ~40% CPU
-          // (592 -> ~410 CPU-s) for a one-off in-partition sort at cache
-          // build; on an already-clustered input the sort is near-free.
-          // SortExec preserves the HashPartitioning(conv_id) the consumers
-          // plan against, and the sorted cache also satisfies the window's
-          // required child ordering (conv_id prefix), eliding that sort.
-          share(envoRows0
-            .repartition(spark.sessionState.conf.numShufflePartitions,
-              org.apache.spark.sql.functions.col("conv_id"))
-            .sortWithinPartitions(
-              org.apache.spark.sql.functions.col("conv_id"),
-              org.apache.spark.sql.functions.col("turn_idx"))
-            .persist(disk))
-        case "cache" =>
-          share(envoRows0.persist(disk))
-        case "localckpt" =>
-          envoRows0.localCheckpoint(eager = false)
-        case "exchange" =>
-          envoRows0.repartition(org.apache.spark.sql.functions.col("conv_id"))
-      }
+      else share(envoRows0
+        .repartition(spark.sessionState.conf.numShufflePartitions,
+          org.apache.spark.sql.functions.col("conv_id"))
+        .sortWithinPartitions(
+          org.apache.spark.sql.functions.col("conv_id"),
+          org.apache.spark.sql.functions.col("turn_idx"))
+        .persist(disk))
     val mentionRows = MentionDetect.explodeMentions(turnMentions0)
 
     // Fused path (flat scoring, no checkpointing): ONE aggregation yields
     // score + evidence together — no second pass over envoRows, no
     // scores×support join. Checkpointed runs keep the classic stage
     // boundaries so resume layouts stay config-independent.
-    // partcache: materialize the partitioned cache BEFORE any consumer is
-    // planned — consumer plans then see the cache's final HashPartitioning
-    // (conv_id) and every downstream agg/window/self-join goes local. The
-    // action is a noop write: it scans the cache (building every partition)
-    // in the cache-building stage itself, where count() would add a
+    // Materialize the partitioned cache BEFORE any consumer is planned —
+    // consumer plans then see the cache's final HashPartitioning (conv_id)
+    // and every downstream agg/window/self-join goes local. The action is
+    // a noop write: it scans the cache (building every partition) in the
+    // cache-building stage itself, where count() would add a
     // single-partition exchange and a final-aggregate job.
-    if (materializeEnvoRows) KgPipeline.materialize(envoRows)
+    if (cfg.persistIntermediates) KgPipeline.materialize(envoRows)
 
     val fused: Option[DataFrame] =
       if (fusedApplies) {
@@ -287,8 +242,7 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
         // same materialize-before-plan reasoning (and the same noop
         // action): the co-occurrence self-join goes exchange-free only when
         // the cached fused frame's conv_id partitioning is visible at
-        // planning time — true for every strategy (the window always
-        // leaves it conv_id-partitioned)
+        // planning time (the window leaves it conv_id-partitioned)
         if (cfg.persistIntermediates) KgPipeline.materialize(f)
         Some(f)
       } else None
@@ -312,20 +266,12 @@ final class KgPipeline(spark: SparkSession, cfg: PipelineConfig = PipelineConfig
         TripleEmit.annotatedWith(spark, scores, envoRows, dict, cfg.evidenceCap)
       }
     }
-    // The mention branch is a pure projection — it needs no partitioning.
-    // Under "exchange" sharing its copy of the repartition would be pruned
-    // differently from the scoring copy (so nothing is reused) AND would
-    // shuffle the full-width rows for no benefit: re-tagging directly is a
-    // zero-shuffle codegen scan, strictly cheaper. Cache-family strategies
-    // DO give this branch a free ride, so they keep the shared frame —
-    // except on thin fused runs, where the shared frame has no provenance
-    // columns: there the FULL mention frame re-derives from the un-shuffled
-    // tagger output, and the canonical sink unions a thin projection of the
-    // shared frame instead (mentionTriplesForUnion).
-    val mentionSource =
-      if (fusedThin) envoRows0full
-      else if (strategy == "exchange") envoRows0
-      else envoRows
+    // The mention branch is a pure projection: the shared cache gives it a
+    // free ride — except on thin fused runs, where the shared frame has no
+    // provenance columns: there the FULL mention frame re-derives from the
+    // un-shuffled tagger output, and the canonical sink unions a thin
+    // projection of the shared frame instead (mentionTriplesForUnion).
+    val mentionSource = if (fusedThin) envoRows0full else envoRows
     val mentionTriples = TripleEmit.mentionTriples(spark, mentionSource, dict)
     val mentionUnion =
       if (fusedThin) Some(TripleEmit.mentionTriplesThin(spark, envoRows, dict))

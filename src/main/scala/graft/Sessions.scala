@@ -19,9 +19,10 @@ object Sessions {
       // re-exchanged by every one of its three consumers)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
       // preferSortMergeJoin=false + adaptive SHJ threshold were A/B'd in r7
-      // (tools.AbConf, interleaved same-session pairs on d6/d7/d21): a wash
-      // at every measured size — AQE-coalesced partitions make the sorts
-      // cheap — so the default stays, per measure-first.
+      // (tools.QueryTime with overrides, interleaved same-session pairs on
+      // d6/d7/d21): a wash at every measured size — AQE-coalesced
+      // partitions make the sorts cheap — so the default stays, per
+      // measure-first.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // shuffle/spill on tmpfs: the sandbox analog of cluster-grade NVMe

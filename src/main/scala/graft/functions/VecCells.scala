@@ -37,7 +37,8 @@ import org.apache.spark.sql.types._
  *  - `vec_top_cells` == `slice(reverse(array_sort(array(struct(s, cell)…
  *    ))), 1, p).cell`: descending (s, cell), null-score cells after every
  *    real score (array_sort ascending puts null fields first), ties by
- *    cell descending; fewer than p cells returns them all;
+ *    cell descending; fewer than p cells returns them all; a negative
+ *    literal p is rejected at analysis;
  *  - NULL vec -> NULL result (null-intolerant).
  */
 private[graft] object VecCells {
@@ -196,7 +197,9 @@ case class VecTopCells(first: Expression, second: Expression,
   @transient private lazy val (cellIds, mat) = VecCells.decode(second, third)
   @transient private lazy val p: Int = {
     require(fourth.foldable, "vec_top_cells: p must be a literal")
-    fourth.eval(null).asInstanceOf[Number].intValue()
+    val n = fourth.eval(null).asInstanceOf[Number].intValue()
+    require(n >= 0, s"vec_top_cells: p (cells to probe) must be >= 0, got $n")
+    n
   }
   @transient private lazy val vecCode: Int = first.dataType match {
     case ArrayType(DoubleType, _) => VecDot.ElemDouble
@@ -213,8 +216,12 @@ case class VecTopCells(first: Expression, second: Expression,
     }
     if (vecOk && second.dataType.isInstanceOf[ArrayType] &&
         third.dataType.isInstanceOf[ArrayType] &&
-        (fourth.dataType == IntegerType || fourth.dataType == LongType))
+        (fourth.dataType == IntegerType || fourth.dataType == LongType)) {
+      // decode a literal p here, so a negative one fails at analysis
+      // instead of probing zero cells
+      if (fourth.foldable && fourth.eval(null) != null) { val _ = p }
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    }
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"vec_top_cells(vec array<numeric>, cells array<int>, matrix array<array<double>>, p int), " +
         s"got ${first.dataType} / ${second.dataType} / ${third.dataType} / ${fourth.dataType}")

@@ -135,14 +135,13 @@ object DocOps {
   }
 
   /** (doc_id, g) shingle rows → (doc_id, bkey) LSH band rows in ONE shuffle
-    * — the d8 treatment applied to d7 (shared with tools.ProfileD7 so the
-    * profiler can never drift from the production plan). The k Kirsch-
-    * Mitzenmacher hashes h_i = (a + i*b) mod 2^60 (a = md5 hex 1-15,
-    * b = hex 17-30 — ONE md5 per shingle) are k COLUMNS of the gram
-    * projection, and the k signature mins are k aggs of a single
-    * groupBy(doc_id): partial aggregation collapses each map partition to
-    * one row per doc BEFORE the exchange, where the old posexplode shape
-    * shuffled 12× the shingle rows through groupBy(doc_id, i). Band keys
+    * — the d8 treatment applied to d7. The k Kirsch-Mitzenmacher hashes
+    * h_i = (a + i*b) mod 2^60 (a = md5 hex 1-15, b = hex 17-30 — ONE md5
+    * per shingle) are k COLUMNS of the gram projection, and the k
+    * signature mins are k aggs of a single groupBy(doc_id): partial
+    * aggregation collapses each map partition to one row per doc BEFORE
+    * the exchange, where the old posexplode shape shuffled 12× the
+    * shingle rows through groupBy(doc_id, i). Band keys
     * are then a pure projection (explode of nBands concat_ws keys). Same
     * h_i arithmetic, same key strings — the DuckDB oracle is unchanged. */
   private[graft] def kmMinhashBands(grams: DataFrame, k: Int, rowsPerBand: Int): DataFrame = {
@@ -637,9 +636,9 @@ object DocOps {
     * per-document window function (doc-local, skew-free). The hash frame
     * feeds both the agg and the join-back, so it is persisted (md5 per
     * window is the expensive upstream — the repo-wide twice-referenced
-    * rule). */
-  def repeatedSpansOf(df: DataFrame, window: Int = 10, minDf: Long = 2,
-                      persist: Boolean = true): DataFrame = {
+    * rule; measured r7 at sf0.1, warm best-of-2: 2.6-2.7 s persisted vs
+    * 3.5 s recomputed). */
+  def repeatedSpansOf(df: DataFrame, window: Int = 10, minDf: Long = 2): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
     // explode the POSITIONS, hash in the projection: the md5-per-window
@@ -647,15 +646,13 @@ object DocOps {
     // transform lambda it ran through the interpreted HOF path per element
     // (r7; same rows, same hashes). Generate pipelines into the projection
     // within one codegen stage, so toks is never materialized per position.
-    val rows0 = df.filter(size(col("toks")) >= window)
+    val rows = df.filter(size(col("toks")) >= window)
       .select(col("doc_id"), col("toks"),
         explode(expr(s"sequence(1, size(toks) - ${window - 1})")).as("p"))
       .select(col("doc_id"), col("p").cast("bigint").as("pos"),
         expr(s"cast(conv(substring(md5(concat_ws(' ', slice(toks, p, $window))), 1, 15), 16, 10) as bigint)")
           .as("h"))
-    val rows =
-      if (persist) rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rows0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dup = rows.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select("h")
     val hits = rows.join(dup, Seq("h")).select("doc_id", "pos")

@@ -4,7 +4,7 @@ import graft.Sessions
 import graft.synth.TranscriptGen
 
 /** Materialize a deterministic synthetic transcript corpus to parquet —
-  * the input Bench/ProfileKg consume. Usage: GenCorpus <nConvs> <outPath>
+  * the input Bench and CountKg consume. Usage: GenCorpus <nConvs> <outPath>
   * [partitions] [verbosity] */
 object GenCorpus {
   def main(args: Array[String]): Unit = {

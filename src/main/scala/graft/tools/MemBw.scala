@@ -3,7 +3,7 @@ package graft.tools
 /** Raw memory-BANDWIDTH scaling probe (no Spark): T threads stream-sum
   * disjoint chunks of a buffer far larger than LLC, so throughput is
   * bound by the memory subsystem, not ALU. Complements the cache-resident
-  * tag-loop probe (CpuScale), which measures CORE availability only — on
+  * tag-loop probe (Bench.rawCpuProbe), which measures CORE availability only — on
   * this VM the two ceilings differ wildly, and Spark's shuffle/cache-scan
   * phases live under THIS one. Usage: MemBw [threadCounts...] */
 object MemBw {

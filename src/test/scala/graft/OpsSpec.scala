@@ -550,6 +550,19 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("vec_top_cells rejects a negative p at analysis") {
+    import spark.implicits._
+    val vecs = Seq(Seq(1.0, 0.0)).toDF("v")
+    def top(p: Int) = graft.functions.GraftFunctions.vec_top_cells(col("v"),
+      typedlit(Seq(0, 1)), typedlit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))), lit(p))
+    // select() analyzes eagerly: the error comes before any action runs
+    val e = intercept[IllegalArgumentException](vecs.select(top(-1)))
+    assert(e.getMessage.contains("vec_top_cells: p (cells to probe) must be >= 0, got -1"))
+    // p = 0 stays legal (probes nothing); p = 1 is the best cell
+    assert(vecs.select(top(0)).head().getSeq[Int](0).isEmpty)
+    assert(vecs.select(top(1)).head().getSeq[Int](0) == Seq(0))
+  }
+
   test("bounded_min_set == slice(sort_array(collect_set)) with O(cap) state") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
